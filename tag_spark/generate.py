@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tag_spark.schema import DEFAULT_ROLES, DEFAULT_TOOLS
+from tag_spark.session import local_frame
 
 # Deterministic plant classes keyed by pmod(hash(conv), 100) — fraction of
 # conversations per population (FIXTURES.md §1 row populations).
@@ -172,8 +173,8 @@ def write_transcripts(spark: SparkSession, path: str, n_convs: int, seed: int = 
 
 
 def dim_role(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(r,) for r in DEFAULT_ROLES], "role string")
+    return local_frame(spark, [(r,) for r in DEFAULT_ROLES], "role string")
 
 
 def dim_tool(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(t,) for t in DEFAULT_TOOLS], "tool string")
+    return local_frame(spark, [(t,) for t in DEFAULT_TOOLS], "tool string")

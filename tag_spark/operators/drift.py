@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tag_spark.session import local_frame
+
 HIST_SCHEMA = T.StructType(
     [
         T.StructField("metric", T.StringType(), False),
@@ -203,4 +205,4 @@ def drift_check(
     for m in sorted(set(base_all) | set(cur_all)):
         psi, ks, nb, nc = psi_ks(base_all.get(m, {}), cur_all.get(m, {}))
         out.append((m, float(psi), float(ks), nb, nc, bool(psi > psi_threshold)))
-    return spark.createDataFrame(out, DRIFT_SCHEMA)
+    return local_frame(spark, out, DRIFT_SCHEMA)

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tag_spark.operators.text import token_count
+from tag_spark.session import local_frame
 
 
 def chunk_documents(
@@ -130,8 +131,8 @@ def pack_token_stream(
     lo_hi = df.agg(F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")).first()
     spark = df.sparkSession
     if lo_hi["lo"] is None:
-        return spark.createDataFrame(
-            [], "doc_id long, n_tokens long, token_offset long, first_seq long, last_seq long, n_seqs long"
+        return local_frame(
+            spark, [], "doc_id long, n_tokens long, token_offset long, first_seq long, last_seq long, n_seqs long"
         )
     lo, hi = int(lo_hi["lo"]), int(lo_hi["hi"])
     span = max(1, hi - lo + 1)
@@ -151,7 +152,7 @@ def pack_token_stream(
     for k in range(n_buckets):
         prefix[k] = acc
         acc += int(totals.get(k, 0))
-    prefix_df = F.broadcast(spark.createDataFrame([(k, v) for k, v in prefix.items()], "__b int, __prefix long"))
+    prefix_df = F.broadcast(local_frame(spark, list(prefix.items()), "__b int, __prefix long"))
     # phase 2: per-bucket cumsum, offset = bucket prefix + within-bucket
     # running sum excluding self
     from pyspark.sql import Window

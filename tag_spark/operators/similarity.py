@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from tag_spark.session import local_frame
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")), F.lit(0.0), lambda acc, v: acc + v)
@@ -537,7 +539,7 @@ def _distributed_footer_count(spark, paths: list[str]) -> int:
         for pdf in it:
             yield pd.DataFrame({"n": [sum(pq.ParquetFile(p).metadata.num_rows for p in pdf["path"])]})
 
-    files_df = spark.createDataFrame([(p,) for p in paths], "path string")
+    files_df = local_frame(spark, [(p,) for p in paths], "path string")
     n_tasks = max(1, -(-len(paths) // _DRIVER_FOOTER_LIMIT))
     row = files_df.repartition(n_tasks).mapInPandas(_counts, "n long").agg(F.sum("n").alias("n")).first()
     return int(row["n"])
@@ -799,7 +801,7 @@ class LshAnnIndex:
                 sig |= (acc >= 0).astype(np.int64) << p
             base = t << self.n_planes
             enc_rows += [(int(q), int(base | s)) for q, s in zip(qids, sig)]
-        qx = queries.sparkSession.createDataFrame(enc_rows, "qid long, enc long")
+        qx = local_frame(queries.sparkSession, enc_rows, "qid long, enc long")
         cand = (
             qx.join(self.pairs, "enc")
             .dropDuplicates(["qid", "id"])
@@ -1307,7 +1309,7 @@ class IvfIndex:
         d2 = _direct_d2(Q, self.centroids)
         order = np.argsort(d2, axis=1, kind="stable")[:, : min(nprobe, self.centroids.shape[0])]
         qx_rows = [(int(q), int(c)) for q, cells in zip(qids, order) for c in cells]
-        qx = queries.sparkSession.createDataFrame(qx_rows, "qid long, cell int")
+        qx = local_frame(queries.sparkSession, qx_rows, "qid long, cell int")
         cand = self.assigned.join(F.broadcast(qx), "cell").select(
             F.col("qid").cast("long"),
             F.col(self.id_col).cast("long").alias("vid"),

@@ -23,6 +23,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from tag_spark.functions.hashing import turn_sha1
 from tag_spark.operators.checks import (
@@ -83,7 +84,7 @@ class ValidationSuite:
         self.bucket_fn = bucket_fn or bucket_expr
 
     # ------------------------------------------------------------------
-    def violations(self, df: DataFrame, shuffle_for_windows: bool = True, carry_cols: tuple[str, ...] = (), observe=None) -> DataFrame:
+    def violations(self, df: DataFrame, shuffle_for_windows: bool = True, carry_cols: tuple[str, ...] = ()) -> DataFrame:
         """All violation rows in one fused plan (unordered — order at write).
 
         Two-stage shape, chosen for 100 TB inputs:
@@ -167,20 +168,6 @@ class ValidationSuite:
             self.bucket_fn(conv_col, self.n_buckets).alias("bucket_id"),
             fails_array(row_checks).alias("__rowfails"),
         )
-
-        if observe is not None:
-            # per-bucket row counts collected DURING this job (CollectMetrics,
-            # map-side) — run() then never re-scans the fact table just to
-            # count rows per bucket. 64 lightweight count aggregates.
-            stage1 = stage1.observe(
-                observe,
-                *[F.count(F.when(F.col("bucket_id") == i, 1)).alias(f"b{i}") for i in range(self.n_buckets)],
-                # rows whose bucket falls outside 0..n-1 (a sign-preserving
-                # mod_bucket over negative keys): when present, run() must
-                # abandon the fixed-range fast path and count buckets from
-                # the data, or those rows would vanish from rows_checked
-                F.count(F.when(~F.col("bucket_id").between(0, self.n_buckets - 1), 1)).alias("b_other"),
-            )
 
         if window_checks and shuffle_for_windows:
             stage1 = stage1.repartition(F.col(conv_col))
@@ -273,8 +260,6 @@ class ValidationSuite:
         out-of-range buckets from sign-preserving bucket fns natively,
         with none of the observed-metrics-node-eliminated fallback
         machinery)."""
-        from pyspark.storagelevel import StorageLevel
-
         violations = self.violations(df).persist(StorageLevel.MEMORY_AND_DISK)
         violations.count()  # one action: materializes the cache
         return self.assemble(df, violations)
@@ -290,12 +275,19 @@ class ValidationSuite:
         frame — lets callers mix in externally-produced violations (e.g. the
         salted ordering path) and still get one coherent matrix.
         ``extra_checks`` maps external check_id -> severity. Without
-        ``bucket_counts`` (observed during the violations job in run()),
-        the per-bucket row counts cost one column-pruned scan of df."""
+        ``bucket_counts``, the per-bucket row counts cost one column-pruned
+        scan of df. That n_buckets-row result is kept in one partition, so
+        the verdict matrix and record_run's manifest entry run as single
+        tasks (one manifest file per run), and persisted, so the first
+        verdict action fills the cache and later ones (record_run) do not
+        scan df again."""
         conv_col = self.key_cols[0]
         if bucket_counts is None:
-            bucket_counts = df.groupBy(self.bucket_fn(conv_col, self.n_buckets).alias("bucket_id")).agg(
-                F.count(F.lit(1)).alias("rows_checked")
+            bucket_counts = (
+                df.groupBy(self.bucket_fn(conv_col, self.n_buckets).alias("bucket_id"))
+                .agg(F.count(F.lit(1)).alias("rows_checked"))
+                .coalesce(1)
+                .persist(StorageLevel.MEMORY_AND_DISK)
             )
 
         sev = {c.check_id: c.severity for c in self.checks}
@@ -305,9 +297,11 @@ class ValidationSuite:
 
         vcounts = violations.groupBy("bucket_id", "check_id").agg(F.count(F.lit(1)).alias("rows_violating"))
 
-        # full matrix: every (bucket present in data) x (check in suite)
-        checks_df = df.sparkSession.createDataFrame([(cid,) for cid in sev], "check_id string")
-        matrix = bucket_counts.crossJoin(F.broadcast(checks_df))
+        # full matrix: every (bucket present in data) x (check in suite),
+        # exploded from a literal array of check ids — no cross join
+        matrix = bucket_counts.select(
+            "bucket_id", "rows_checked", F.explode(F.array(*[F.lit(cid) for cid in sev])).alias("check_id")
+        )
         verdicts = (
             matrix.join(vcounts, ["bucket_id", "check_id"], "left")
             .withColumn("rows_violating", F.coalesce(F.col("rows_violating"), F.lit(0)).cast("long"))

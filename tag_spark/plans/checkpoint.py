@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tag_spark.session import local_frame
+
 MANIFEST_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -43,7 +45,7 @@ class CheckpointManifest:
         try:
             return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
         except Exception:
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+            return local_frame(self.spark, [], MANIFEST_SCHEMA)
 
     def completed_buckets(self, snapshot_id: str | None = None) -> list[int]:
         """Buckets recorded done — optionally ONLY under the given input

@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -51,3 +52,22 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str | StructType) -> DataFrame:
+    """A small driver-built relation planned as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` plans a pickled Python RDD (``Scan
+    ExistingRDD``): every job over it schedules Python-worker tasks just to
+    deserialise a handful of rows. Going through one Arrow table instead
+    keeps the rows in the JVM (``LocalTableScan``), where a broadcast or
+    join over them costs no Python worker. ``schema`` is a DDL string or a
+    StructType; nullability is kept."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays([pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema)
+    return spark.createDataFrame(table, struct)

@@ -3,6 +3,7 @@
 If a refactor re-introduces a second exchange, breaks the shared-Sort
 prefix rule, or stops pruning the parquet scan, these fail loudly."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from tag_spark.generate import dim_role, dim_tool
@@ -11,6 +12,15 @@ from tag_spark.operators.suite import default_transcript_suite
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture(autouse=True)
+def _uncached(spark, transcripts):
+    """Pin each plan's own shape, not a cache hit: local relations with
+    equal rows compare equal, so a suite another test persisted over the
+    same input would answer these plans from its InMemoryRelation."""
+    spark.catalog.clearCache()
+    transcripts.cache()
 
 
 def test_suite_plans_one_exchange_one_sort(spark, transcripts):
@@ -28,6 +38,21 @@ def test_suite_plans_one_exchange_one_sort(spark, transcripts):
     n_sort = plan.count("+- Sort ")
     assert n_sort == 1, f"window checks must share ONE Sort, got {n_sort}:\n{plan}"
     assert plan.count("BroadcastHashJoin") == 2  # role + tool dims
+
+
+def test_suite_small_relations_stay_in_the_jvm(spark, transcripts):
+    """The vocabulary dims are JVM local relations, and the verdict matrix
+    explodes a literal check-id array over the bucket counts. No plan on
+    the validation path scans a Python RDD (every job over one pays
+    Python-worker tasks), and the matrix needs no cross join."""
+    suite = default_transcript_suite(dim_role(spark), dim_tool(spark))
+    violations = suite.violations(transcripts)
+    vplan = _plan(violations)
+    assert "Scan ExistingRDD" not in vplan, vplan
+    dplan = _plan(suite.assemble(transcripts, violations).verdicts)
+    assert "Scan ExistingRDD" not in dplan, dplan
+    for node in ("BroadcastNestedLoopJoin", "CartesianProduct"):
+        assert node not in dplan, dplan
 
 
 def test_suite_text_never_shuffles(spark, transcripts):
